@@ -10,18 +10,33 @@ OWN mean and population stddev with epsilon 1e-8 on the scale
 (``future``) — the forecast target/gather (notebooks/test.ipynb cell 20)
 — from the SAME sort order, avoiding a separate as-of join.
 
-Scale design: ``collect_list`` over a row frame amplifies data ~L×.
-Mitigations baked in: (1) only the single value column is collected —
-project before calling; (2) both the window frame and the future frame
-share one Window spec → one shuffle + one sort per symbol; (3) for
-strided evaluation, filter on ``window_id % stride`` BEFORE the
-normalize/embed stages consume the arrays. At 100 TB the per-symbol
-series is still modest (time × symbol layout); partition count scales
-with symbols, and no symbol's series needs to fit anywhere but one
-task's spill-able sort.
+Two builds, one contract (bitwise-equal outputs, pinned by
+tests/test_round16_ops.py):
+
+- the JVM ``collect_list`` build serves shapes with L+P below
+  ``ARROW_BUILD_MIN_WIDTH`` — the registry's window queries, the L=8
+  flagship window store (``plans.flagship.flagship_windows``) and the
+  streaming flagship's train store. It keeps the upstream
+  hash(symbol) clustering, and every symbol's frames go through one
+  task's spill-able sort;
+- the Arrow/NumPy build (``_sliding_windows_arrow``) serves wider
+  shapes. Its NumPy body, :func:`window_block`, is also the window
+  kernel of the fused within-symbol backtest
+  (``operators.forecast.forecast_within_symbol``), so the two can't
+  drift apart.
+
+Memory bound of the Arrow build: one group's narrow (idx, value)
+input plus one output block of ``_ARROW_BUILD_CHUNK`` windows ×
+(L+P) × 8 B and a few same-sized temporaries; blocks leave the worker
+one RecordBatch at a time. The JVM build's ``collect_list`` frames
+amplify data ~L×: project the single value column before calling,
+and for strided evaluation filter on ``window_id % stride`` before
+the arrays are consumed.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -115,6 +130,102 @@ def sliding_windows(
     return out.select(*cols)
 
 
+def series_arrays(idx_a, val_a):
+    """One group's (idx, value) Arrow columns sorted by idx, as NumPy:
+    ``(idx, v, valid)``; ``valid`` is None when no value is NULL.
+
+    Precondition, checked: ``idx`` is non-NULL and unique per group
+    (the upstream dedup/resample guarantees it). The JVM build orders
+    NULL idx first and breaks duplicate-idx ties arbitrarily, while
+    ``argsort`` puts NaN last, so either case would silently desync
+    the two builds; it raises instead.
+    """
+    import numpy as np
+
+    if idx_a.null_count:
+        raise ValueError(
+            f"window build: {idx_a.null_count} NULL idx value(s) in one"
+            " group; the idx column must be non-NULL"
+        )
+    idx = idx_a.to_numpy(zero_copy_only=False)
+    order = np.argsort(idx, kind="stable")
+    idx = idx[order]
+    dup = np.nonzero(idx[1:] == idx[:-1])[0]
+    if dup.size:
+        raise ValueError(
+            f"window build: duplicate idx {idx[dup[0]]!r} in one group;"
+            " the idx column must be unique per group (dedup upstream)"
+        )
+    v = np.ascontiguousarray(val_a.to_numpy(zero_copy_only=False)[order])
+    valid = ~np.asarray(val_a.is_null())[order] if val_a.null_count else None
+    return idx, v, valid
+
+
+def null_free(valid, st, off: int, width: int):
+    """Per start in ``st``: do rows ``[st+off, st+off+width)`` hold no
+    NULL? (All rows must be in bounds.)"""
+    import numpy as np
+
+    if valid is None:
+        return np.ones(st.size, dtype=bool)
+    bad = np.zeros(valid.size + 1, dtype=np.int64)
+    np.cumsum(~valid, out=bad[1:])
+    return bad[st + off + width] - bad[st + off] == 0
+
+
+def complete_starts(valid, n: int, L: int):
+    """Start rows of the complete windows: an L-frame without NULL
+    (collect_list drops NULLs, so the JVM build drops such frames)."""
+    import numpy as np
+
+    st = np.arange(max(n - L + 1, 0), dtype=np.int64)
+    return st[null_free(valid, st, 0, L)]
+
+
+def window_block(v, valid, st, L: int, P: int, eps: float):
+    """The window kernel shared by the standalone Arrow build and the
+    fused backtest pass (operators/forecast.py): for the window starts
+    ``st`` (rows of the sorted series ``v``) returns ``(center, scale,
+    xs, future, future_ok)``; ``future`` is the (m, P) block of values
+    following each window, ``future_ok`` marks the in-bounds non-NULL
+    ones.
+
+    Bitwise parity with the JVM build — sequential WITHIN each window,
+    vectorized ACROSS windows:
+
+    - the window sum accumulates ``acc = 0.0; acc += x_j`` in frame
+      order, identical to Sum's ``coalesce(null, 0.0) + x_1 + ...``
+      left fold;
+    - the variance fold adds ``(x_j - center)^2`` in the same frame
+      order as the interpreted ``aggregate`` lambda;
+    - center/scale/xs apply the same scalar IEEE ops per element
+      (``/L``, ``sqrt``, ``(x - center) / (scale + eps)``).
+
+    Memory is O(len(st) × (L+P)); callers pass blocks of at most
+    ``_ARROW_BUILD_CHUNK`` starts.
+    """
+    import numpy as np
+
+    m = st.size
+    W = v[st[:, None] + np.arange(L, dtype=np.int64)]
+    s = np.zeros(m, dtype=np.float64)
+    for j in range(L):  # frame-order left fold, 0.0 + x1 + ...
+        s += W[:, j]
+    center = s / float(L)
+    acc = np.zeros(m, dtype=np.float64)
+    for j in range(L):  # same fold order as the aggregate lambda
+        d = W[:, j] - center
+        acc += d * d
+    scale = np.sqrt(acc / float(L))
+    xs = (W - center[:, None]) / (scale + eps)[:, None]
+    pos = st[:, None] + L + np.arange(P, dtype=np.int64)
+    ok = pos < v.size
+    pos = np.minimum(pos, v.size - 1)
+    if valid is not None:
+        ok &= valid[pos]
+    return center, scale, xs, v[pos], ok
+
+
 def _sliding_windows_arrow(
     df: DataFrame,
     value_col: str,
@@ -125,34 +236,25 @@ def _sliding_windows_arrow(
     eps: float,
 ) -> DataFrame:
     """Vectorized window build: one ``applyInArrow`` pass per
-    (*parts) group, NumPy inside (guide §4.2).
-
-    Bitwise parity with the JVM path (same device as the r15 DCT
-    chains — sequential WITHIN each window, vectorized ACROSS
-    windows):
-
-    - window sum accumulates ``acc = 0.0; acc += x_j`` in frame order
-      (one vector add per j), identical to Sum's
-      ``coalesce(null, 0.0) + x_1 + x_2 + ...`` left fold;
-    - the variance fold adds ``(x_j - center)^2`` in the same frame
-      order as the interpreted ``aggregate`` lambda;
-    - center/scale/xs apply the same scalar IEEE ops per element
-      (``/L``, ``sqrt``, ``(x - center) / (scale + eps)``).
+    (*parts) group, NumPy inside (guide §4.2), through
+    :func:`window_block`.
 
     NULL semantics replicate collect_list exactly: a NULL inside a
     window's L-frame makes collect_list return < L values, so the
-    window is dropped (here: an all-valid sliding test); a NULL in
-    the future frame is compacted out of the (then shorter) future
-    array. NaN VALUES are not NULLs and flow through both engines'
+    window is dropped (here: :func:`complete_starts`); a NULL in the
+    future frame is compacted out of the (then shorter) future array.
+    NaN VALUES are not NULLs and flow through both engines'
     arithmetic identically.
+
+    Output goes out as one RecordBatch per ``_ARROW_BUILD_CHUNK``
+    window starts (the iterator form of ``applyInArrow``), so the
+    worker holds the group's narrow input plus one output block, not
+    the group's whole amplified output.
 
     Trade-off vs the JVM path (why small shapes keep it): the
     grouped Python pass drops Catalyst's knowledge of the upstream
     hash partitioning, so a downstream operator keyed on the parts
-    re-shuffles the built arrays unless the consumer re-derives its
-    keys from narrow rows (plans/flagship.py does). Per-task memory
-    is O(group rows × (L+P) × 8B) for the returned group output;
-    the NumPy working set is bounded by _ARROW_BUILD_CHUNK.
+    re-shuffles the built arrays.
     """
     import numpy as np
     import pyarrow as pa
@@ -172,70 +274,26 @@ def _sliding_windows_arrow(
     ]
     if P:
         out_fields.append(StructField("future", ArrayType(DoubleType())))
-    out_schema = StructType(out_fields)
-
+    names = [f.name for f in out_fields]
     n_parts = len(parts)
-    chunk = _ARROW_BUILD_CHUNK
 
-    def build(table: "pa.Table") -> "pa.Table":
-        jL = np.arange(L, dtype=np.int64)
-        jP = np.arange(P, dtype=np.int64) if P else None
-        list_t = pa.list_(pa.float64())
-
-        def empty() -> "pa.Table":
-            arrays = [table.column(i).slice(0, 0) for i in range(n_parts)]
-            arrays.append(table.column(n_parts).slice(0, 0))  # window_id
-            arrays += [pa.array([], pa.float64())] * 2
-            arrays.append(pa.array([], list_t))
-            if P:
-                arrays.append(pa.array([], list_t))
-            return pa.Table.from_arrays(
-                arrays, names=[f.name for f in out_fields]
-            )
-
-        n = table.num_rows
-        if n < L:
-            return empty()
+    def build(batches):
+        batches = list(batches)
+        if not batches:
+            return
         # column order fixed by the select below: parts, idx, value
+        table = pa.Table.from_batches(batches)
         idx_a = table.column(n_parts).combine_chunks()
-        val_a = table.column(n_parts + 1).combine_chunks()
-        idx = idx_a.to_numpy(zero_copy_only=False)
-        order = np.argsort(idx, kind="stable")
-        idx = idx[order]
-        v = np.ascontiguousarray(
-            val_a.to_numpy(zero_copy_only=False)[order]
+        idx, v, valid = series_arrays(
+            idx_a, table.column(n_parts + 1).combine_chunks()
         )
-        if val_a.null_count:
-            inv_mask = np.asarray(val_a.is_null())[order]
-            bad = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(inv_mask.astype(np.int64), out=bad[1:])
-            starts = np.nonzero(bad[L:] - bad[: n + 1 - L] == 0)[0]
-            valid = ~inv_mask
-        else:
-            starts = np.arange(n - L + 1, dtype=np.int64)
-            valid = None
-        if starts.size == 0:
-            return empty()
-
-        batches = []
-        names = [f.name for f in out_fields]
-        for c0 in range(0, starts.size, chunk):
-            st = starts[c0 : c0 + chunk]
+        starts = complete_starts(valid, idx.size, L)
+        keys = [table.column(k)[0] for k in range(n_parts)]
+        for c0 in range(0, starts.size, _ARROW_BUILD_CHUNK):
+            st = starts[c0 : c0 + _ARROW_BUILD_CHUNK]
             m = st.size
-            W = v[st[:, None] + jL]  # (m, L), all-valid by keep mask
-            s = np.zeros(m, dtype=np.float64)
-            for j in range(L):  # frame-order left fold, 0.0 + x1 + ...
-                s += W[:, j]
-            center = s / float(L)
-            acc = np.zeros(m, dtype=np.float64)
-            for j in range(L):  # same fold order as the aggregate lambda
-                d = W[:, j] - center
-                acc += d * d
-            scale = np.sqrt(acc / float(L))
-            xs = (W - center[:, None]) / (scale + eps)[:, None]
-            arrays = [
-                pa.repeat(table.column(k)[0], m) for k in range(n_parts)
-            ]
+            center, scale, xs, fut, ok = window_block(v, valid, st, L, P, eps)
+            arrays = [pa.repeat(key, m) for key in keys]
             arrays.append(pa.array(idx[st], type=idx_a.type))
             arrays.append(pa.array(center))
             arrays.append(pa.array(scale))
@@ -246,27 +304,22 @@ def _sliding_windows_arrow(
                 )
             )
             if P:
-                pos = st[:, None] + L + jP  # (m, P)
-                inb = pos < n
-                posc = np.minimum(pos, n - 1)
-                msk = inb & valid[posc] if valid is not None else inb
-                f_lens = msk.sum(axis=1)
-                f_off = np.zeros(m + 1, dtype=np.int64)
-                np.cumsum(f_lens, out=f_off[1:])
-                fvals = v[posc][msk]  # row-major: frame order per row
+                f_off = np.zeros(m + 1, dtype=np.int32)
+                np.cumsum(ok.sum(axis=1), out=f_off[1:])
+                # boolean indexing is row-major: frame order per row
                 arrays.append(
                     pa.ListArray.from_arrays(
-                        pa.array(f_off.astype(np.int32)),
-                        pa.array(fvals),
+                        pa.array(f_off), pa.array(fut[ok])
                     )
                 )
-            batches.append(
-                pa.RecordBatch.from_arrays(arrays, names=names)
-            )
-        return pa.Table.from_batches(batches)
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
+    build.__annotations__ = {
+        "batches": Iterator[pa.RecordBatch],
+        "return": Iterator[pa.RecordBatch],
+    }
     return (
         df.select(*parts, idx_col, value_col)
         .groupBy(*parts)
-        .applyInArrow(build, schema=out_schema)
+        .applyInArrow(build, schema=StructType(out_fields))
     )

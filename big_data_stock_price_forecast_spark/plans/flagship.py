@@ -4,11 +4,31 @@ events → dedup keep-last → 6h OHLC resample → time_idx → warmup skip →
 time-ordered split → per-split gap fill → sliding windows + z-score →
 k-NN search → analogical forecast → per-query MAE.
 
-This is ONE lazy DataFrame plan end-to-end; Catalyst prunes the events
-scan down to (user_id, ts, value, event_id) and AQE sizes every
-exchange. Embedding = the z-scored window itself (the reference's VAE
-latent is an offline-trained artifact; the engine's contract is the
+This is ONE lazy DataFrame plan end-to-end with one wide exchange
+(hash by symbol, in :func:`flagship_labeled`); Catalyst prunes the
+events scan down to (user_id, ts, value, event_id). Embedding = the
+z-scored window itself (the reference's VAE latent is an
+offline-trained artifact; the engine's contract is the
 search/forecast query shape — see SURVEY.md §7 "out of scope").
+
+Which path serves which caller:
+
+- within-symbol search (the default; per-query MAE, summary, per-step
+  errors, the registry's metric sweep and fullscale config): the
+  narrow labeled grid goes through
+  ``operators.forecast.forecast_within_symbol``, one grouped Arrow
+  pass per symbol (gap fill → windows → search → ensemble → MAE).
+  Worker memory per task: one symbol's narrow filled grid plus one
+  block of queries × candidates, whatever the window shape; no
+  window array is shuffled and nothing runs eagerly;
+- global search (``within_symbol=False``): :func:`flagship_windows`
+  builds the window frame in Spark and
+  ``operators.forecast.forecast_evaluate`` joins the strided query
+  set against every symbol's windows;
+- :func:`flagship_windows`, :func:`flagship_train_store` and
+  :func:`flagship_val_starts` serve the streaming flagship (store
+  built offline, queries streamed) and consumers of the windows
+  themselves.
 
 Deliberate deviations from the notebook (documented; the DuckDB oracle
 in __spark_entry__ mirrors THESE semantics exactly):
@@ -34,10 +54,14 @@ from ..operators.cleaning import (
     positional_skip_frac,
     positional_split,
 )
-from ..operators.forecast import error_summary, forecast_evaluate
+from ..operators.forecast import (
+    error_summary,
+    forecast_evaluate,
+    forecast_within_symbol,
+)
 from ..operators.gapfill import fill_missing_time_idx
 from ..operators.resample import resample_ohlcv
-from ..operators.windows import ARROW_BUILD_MIN_WIDTH, sliding_windows
+from ..operators.windows import sliding_windows
 from ..sources.tables import events_series
 
 
@@ -182,6 +206,34 @@ def flagship_step_errors(
 ) -> DataFrame:
     """Per-step (pred, target) pairs of the flagship evaluation — the
     surface the A9 loss-math query aggregates (MAE/MSE/Huber)."""
+    return _evaluate(spark, sf_dir, p, return_steps=True)
+
+
+def flagship_per_query_mae(
+    spark: SparkSession, sf_dir: str, p: FlagshipParams = FlagshipParams()
+) -> DataFrame:
+    """(symbol, window_id, mae) per strided val query."""
+    return _evaluate(spark, sf_dir, p)
+
+
+def _evaluate(
+    spark: SparkSession,
+    sf_dir: str,
+    p: FlagshipParams,
+    return_steps: bool = False,
+) -> DataFrame:
+    if p.within_symbol:
+        return forecast_within_symbol(
+            flagship_labeled(spark, sf_dir, p),
+            L=p.L,
+            pred_window=p.pred_window,
+            ensemble=p.ensemble,
+            metric=p.metric,
+            stride=p.stride,
+            cand_stride=p.cand_stride,
+            query_symbol_mod=p.query_symbol_mod,
+            return_steps=return_steps,
+        )
     train_w, val_w = _flagship_train_val(spark, sf_dir, p)
     return forecast_evaluate(
         train_w,
@@ -190,100 +242,39 @@ def flagship_step_errors(
         k=p.k,
         ensemble=p.ensemble,
         metric=p.metric,
-        within_symbol=p.within_symbol,
+        within_symbol=False,
         dim=p.L,
-        return_steps=True,
+        return_steps=return_steps,
     )
 
 
 def _flagship_train_val(
     spark: SparkSession, sf_dir: str, p: FlagshipParams
 ) -> tuple[DataFrame, DataFrame]:
-    # the window frame is already clustered by hash(symbol) from the
-    # pipeline's one wide exchange (hash(symbol) satisfies clustering
-    # for every (symbol, ...) operator above it), so the search join
-    # is co-partitioned with NO further exchange — an explicit
-    # repartition("symbol") here would re-shuffle the built window
-    # ARRAYS whenever its partition count differed from the
-    # pipeline's (the §8 anti-pattern: heavy payload moved twice).
-    # The val branch rides a BroadcastExchange locally (small strided
-    # query set), which recomputes the upstream pipeline for that
-    # side; past the broadcast threshold Spark falls back to a
-    # sort-merge join whose two shuffle subtrees are identical, so at
-    # scale the pipeline is computed once and reused (ReuseExchange).
+    """Strided train/val window frames for the global (cross-symbol)
+    search. Each split's stride anchor is its first window per symbol
+    (a min() window over the built frame, still hash(symbol)-clustered
+    from the pipeline's one wide exchange)."""
     windows = flagship_windows(spark, sf_dir, p)
     train_w = windows.filter(F.col("split") == "train").drop("split")
     val_w = windows.filter(F.col("split") == "val").drop("split")
     if p.query_symbol_mod is not None:
         val_w = val_w.filter(F.col("symbol") % p.query_symbol_mod == 0)
-
-    # The per-symbol first-window anchor (__w0/__t0) for the stride
-    # cursors. Two value-identical derivations:
-    # - JVM window build (small shapes): a min() window over the built
-    #   windows — free, the frame is still hash(symbol)-clustered.
-    # - Arrow build (wide shapes): the grouped Python pass drops
-    #   Catalyst's clustering knowledge, so the same min() window
-    #   would re-shuffle the built ARRAYS (§8: heavy payload moved
-    #   twice). Instead the anchor comes from the NARROW labeled grid:
-    #   gap fill densifies [min, max] per (symbol, split), so the
-    #   first complete window starts exactly at the split's min
-    #   time_idx (= min labeled time_idx — fill only inserts BETWEEN
-    #   min and max) whenever any complete window exists, and when
-    #   none exists the windows side is already empty, making the
-    #   anchor irrelevant. One tiny per-symbol aggregate, broadcast.
-    arrow_build = p.L + p.pred_window >= ARROW_BUILD_MIN_WIDTH
-    if arrow_build:
-        labeled = flagship_labeled(spark, sf_dir, p).select(
-            "symbol", "split", "time_idx"
-        )
+    by_symbol = Window.partitionBy("symbol")
     if p.cand_stride > 1:
-        if arrow_build:
-            t0 = (
-                labeled.filter(F.col("split") == "train")
-                .groupBy("symbol")
-                .agg(F.min("time_idx").alias("__t0"))
-            )
-            train_w = train_w.join(F.broadcast(t0), "symbol")
-        else:
-            train_w = train_w.withColumn(
-                "__t0", F.min("window_id").over(Window.partitionBy("symbol"))
-            )
+        train_w = train_w.withColumn(
+            "__t0", F.min("window_id").over(by_symbol)
+        )
         train_w = train_w.filter(
             (F.col("window_id") - F.col("__t0")) % p.cand_stride == 0
         ).drop("__t0")
     # strided evaluation cursor (W11): every `stride`-th window position
     # per symbol, position 0 = the symbol's first val window
-    if arrow_build:
-        w0 = (
-            labeled.filter(F.col("split") == "val")
-            .groupBy("symbol")
-            .agg(F.min("time_idx").alias("__w0"))
-        )
-        val_w = val_w.join(F.broadcast(w0), "symbol")
-    else:
-        val_w = val_w.withColumn(
-            "__w0", F.min("window_id").over(Window.partitionBy("symbol"))
-        )
+    val_w = val_w.withColumn("__w0", F.min("window_id").over(by_symbol))
     val_w = val_w.filter(
         (F.col("window_id") - F.col("__w0")) % p.stride == 0
     ).drop("__w0")
     return train_w, val_w
-
-
-def flagship_per_query_mae(
-    spark: SparkSession, sf_dir: str, p: FlagshipParams = FlagshipParams()
-) -> DataFrame:
-    train_w, val_w = _flagship_train_val(spark, sf_dir, p)
-    return forecast_evaluate(
-        train_w,
-        val_w,
-        pred_window=p.pred_window,
-        k=p.k,
-        ensemble=p.ensemble,
-        metric=p.metric,
-        within_symbol=p.within_symbol,
-        dim=p.L,
-    )
 
 
 def flagship_summary(

@@ -579,42 +579,21 @@ def q_flagship_metric_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     137-143; notebooks/test.ipynb cells 21-23; BASELINE.md rows 1-3:
     2.61±2.45 / 2.77±2.96 / 2.74±2.88 at the reference's own scale).
     Each scorer branch is the full flagship evaluation with ONLY the
-    search metric swapped (forecast_evaluate is metric-parameterized;
+    search metric swapped (one fused within-symbol pass per scorer;
     cosine ranks DESC as a similarity); the L2 branch is therefore
-    bitwise-equal to flagship_summary (pytest-pinned). Branch-shared
-    lineage, split by side: the VAL window frame (the broadcast query
-    set) is localCheckpoint(eager)ed — BroadcastExchange subtrees
-    don't reuse, so without it each branch recomputed the full window
-    pipeline (the probe-curve lesson, r13 verdict item 2). The TRAIN
-    side deliberately stays lazy: its branches end in the identical
-    shuffle subtree, which ReuseExchange shares across the three
-    scorers — measured r15 (sf0.1, warm, min-of-3): checkpointing
-    train_w too is ~1s SLOWER (6.5 vs 5.6 s; eager materialization
-    costs more than the already-shared recompute saves).
-    Materialization changes no value (the window fold is exact), so
-    the L2 pin holds. Output: one row per metric. (The kNN-level 5-metric
-    surface incl. the mu/logvar-weighted scorers lives in
-    knn_topk_metrics; the flagship windows are L=8 raw z-scored
-    series, where the reference's split-32 latent weighting has no
-    analog.)"""
-    from ..operators.forecast import forecast_evaluate
-    from .flagship import _flagship_train_val
+    bitwise-equal to flagship_summary (pytest-pinned). The three
+    branches share the labeled grid's one wide exchange
+    (ReuseExchange), so the events pipeline runs once. Output: one row
+    per metric. (The kNN-level 5-metric surface incl. the
+    mu/logvar-weighted scorers lives in knn_topk_metrics; the flagship
+    windows are L=8 raw z-scored series, where the reference's
+    split-32 latent weighting has no analog.)"""
+    from dataclasses import replace
 
     p = FlagshipParams()
-    train_w, val_w = _flagship_train_val(spark, sf_dir, p)
-    val_w = val_w.localCheckpoint(eager=True)
     out = None
     for m in FLAGSHIP_SWEEP_METRICS:
-        df = forecast_evaluate(
-            train_w,
-            val_w,
-            pred_window=p.pred_window,
-            k=p.k,
-            ensemble=p.ensemble,
-            metric=m,
-            within_symbol=p.within_symbol,
-            dim=p.L,
-        )
+        df = flagship_per_query_mae(spark, sf_dir, replace(p, metric=m))
         row = (
             df.select(_rne(F.col("mae"), "mae", 4))
             .agg(
@@ -1628,8 +1607,8 @@ def _flagship_oracle_ctes(
     bucket); empty for the batch flagship oracles. The search scorer
     follows ``p.metric`` (l1/l2/cosine — the reference's headline
     dist_func_eval sweep; cosine is a similarity, so its top-2 rank
-    orders DESC), matching forecast_evaluate's metric_expr_fixed
-    forms bitwise (the knn-suite fold≡flat proof)."""
+    orders DESC), matching the left folds of
+    forecast_within_symbol bitwise."""
     L, P, stride = p.L, p.pred_window, p.stride
     step = p.step_seconds
     every = p.resample_every
@@ -1648,7 +1627,7 @@ def _flagship_oracle_ctes(
     elif p.metric == "l1":
         dist_sql, dist_dir = _sql_l1("t.xs", "q.xs"), "ASC"
     elif p.metric == "cosine":
-        # zero-norm guard: identical CASE in forecast_evaluate —
+        # zero-norm guard: identical sentinel in the engine —
         # constant (gap-filled) z-scored windows have ‖xs‖ = 0 and
         # rank last via the -2.0 sentinel (engines disagree on NULL
         # ordering, never on a sentinel)
@@ -1659,7 +1638,7 @@ def _flagship_oracle_ctes(
             f" ELSE -2.0 END"
         )
         dist_dir = "DESC"
-    else:  # pragma: no cover — forecast_evaluate raises first
+    else:  # pragma: no cover — the engine raises first
         raise ValueError(f"no oracle scorer for metric {p.metric!r}")
     return f"""WITH {SQL_SERIES},
 res AS (

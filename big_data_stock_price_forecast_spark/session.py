@@ -41,7 +41,8 @@ def get_spark(
         try:
             page = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
             half_gb = max(2, int(page / (2 * 1024**3)))
-        except (ValueError, OSError):
+        except (AttributeError, ValueError, OSError):
+            # AttributeError: no os.sysconf on non-POSIX hosts
             half_gb = 12
         driver_memory = f"{min(32, half_gb)}g"
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"

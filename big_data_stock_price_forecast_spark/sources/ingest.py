@@ -213,12 +213,11 @@ def ingest(
     return the deduped silver series. Incremental refresh = call again
     with a larger ``fetch_seq`` and a start inside the existing range;
     the silver dedup resolves the overlap keep-last."""
-    step = validate_timeframe(timeframe)
+    validate_timeframe(timeframe)
     fetch = fetch or synthetic_exchange()
     now_ms = now_ms if now_ms is not None else 1_609_459_200_000  # 2021-01-01
     for symbol in symbols:
         start = default_start_ms(now_ms, total, timeframe)
         rows, _ = fetch_paginated(fetch, symbol, start, total)
         land_pages(spark, bronze_dir, symbol, rows, fetch_seq)
-    _ = step
     return silver_series(read_bronze(spark, bronze_dir))
