@@ -8,12 +8,16 @@ rate-limited REST ``fetch_ohlcv(since=cursor, limit=page)``, advancing
 cdd.py:101-110) merges incremental refetches keep-last.
 
 Spark restatement: the fetch loop is a thin DRIVER-SIDE Python step —
-network I/O is not a distributed concern — landing each page as one
-parquet file in a bronze dir (file-per-page is exactly what the
-streaming file source consumes, `streaming/ops.py`). Everything after
-the landing dir is engine: `spark.read.parquet(bronze)` + keep-last
+network I/O is not a distributed concern — and so is the landing: the
+driver writes each page with pyarrow as one parquet file in its own
+page directory under the bronze dir, with no Spark job. File-per-page
+is exactly what the streaming file source consumes
+(`streaming/ops.py`), and directory-per-page keeps the layout a
+Spark-written page had, so a page (or a whole fetch generation, by
+glob) is removed with ``shutil.rmtree``. Everything after the landing
+dir is engine: a declared-schema ``spark.read`` of the pages + keep-last
 dedup = the silver series; re-fetches overlap the tail and the merge
-resolves duplicates by (fetch_seq, row order) — the S7 semantics, but
+resolves duplicates by (fetch_seq, page) — the S7 semantics, but
 actually wired (the reference's merge is unreachable).
 
 No network here: an injectable ``fetch`` callable stands in for the
@@ -25,11 +29,20 @@ same signature.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 #: a fetch returns rows [ts_ms, open, high, low, close, volume] —
 #: the exchange wire format (core/data/cdd.py:30)
@@ -37,6 +50,21 @@ Row = list
 FetchFn = Callable[[str, int, int], Sequence[Row]]
 
 HOUR_MS = 3_600_000
+
+#: the one bronze page schema: what ``land_pages`` writes and what
+#: ``read_bronze`` declares, so reading bronze runs no discovery job
+BRONZE_SCHEMA = StructType(
+    [
+        StructField("symbol", StringType()),
+        StructField("fetch_seq", IntegerType()),
+        StructField("page", IntegerType()),
+        StructField("ts_ms", LongType()),
+        *(
+            StructField(c, DoubleType())
+            for c in ("open", "high", "low", "close", "volume")
+        ),
+    ]
+)
 
 SUPPORTED_TIMEFRAMES = {"1m": 60_000, "1h": HOUR_MS, "1d": 24 * HOUR_MS}
 
@@ -140,44 +168,62 @@ def land_pages(
     page_rows: int = 1000,
 ) -> list[str]:
     """Write fetched rows as one parquet file PER PAGE under the bronze
-    dir (S5, parquet not CSV). File-per-page is the contract the
-    streaming file source and incremental batch reads share."""
+    dir (S5, parquet not CSV), from the driver with pyarrow: page ``p``
+    of a fetch is ``<slug>_f<fetch_seq>_p<p>.parquet/part-00000.parquet``
+    in ``BRONZE_SCHEMA``, its ``page`` column holding ``p``.
+
+    Each page is a directory, as a Spark-written page was: the streaming
+    file source reads one file per page, and a generation is dropped by
+    removing its page directories (glob ``*_f<seq>_p*.parquet``). A page
+    is written under a dot-prefixed temp name and renamed into place;
+    landing a page again replaces it, like Spark's ``mode("overwrite")``.
+    ``spark`` is unused and kept so callers need not change."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(BRONZE_SCHEMA)
     os.makedirs(bronze_dir, exist_ok=True)
     paths = []
     slug = symbol.replace("/", "-")  # F3 (cdd.py:90)
-    for p in range(0, len(rows), page_rows):
-        chunk = rows[p : p + page_rows]
-        df = spark.createDataFrame(
-            [(symbol, fetch_seq, *r) for r in chunk],
-            "symbol string, fetch_seq int, ts_ms long, open double, "
-            "high double, low double, close double, volume double",
-        )
-        path = os.path.join(
-            bronze_dir, f"{slug}_f{fetch_seq}_p{p // page_rows}.parquet"
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(path)
+    for page, start in enumerate(range(0, len(rows), page_rows)):
+        chunk = rows[start : start + page_rows]
+        n = len(chunk)
+        columns = [[symbol] * n, [fetch_seq] * n, [page] * n, *zip(*chunk)]
+        table = pa.Table.from_pydict(dict(zip(schema.names, columns)), schema=schema)
+        name = f"{slug}_f{fetch_seq}_p{page}.parquet"
+        path = os.path.join(bronze_dir, name)
+        tmp = os.path.join(bronze_dir, f".{name}.tmp")
+        os.makedirs(tmp, exist_ok=True)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+        shutil.rmtree(path, ignore_errors=True)
+        os.replace(tmp, path)
         paths.append(path)
     return paths
 
 
 def read_bronze(spark: SparkSession, bronze_dir: str) -> DataFrame:
-    """S6: schema-preserving scan of the landing dir (all pages, all
-    fetch generations)."""
-    return spark.read.parquet(os.path.join(bronze_dir, "*.parquet"))
+    """S6: scan of the landing dir (all pages, all fetch generations)
+    with the declared ``BRONZE_SCHEMA`` — no schema-discovery job. A page
+    landed before the ``page`` column existed reads it as NULL."""
+    return spark.read.schema(BRONZE_SCHEMA).parquet(
+        os.path.join(bronze_dir, "*.parquet")
+    )
 
 
 def silver_series(bronze: DataFrame) -> DataFrame:
     """Bronze -> silver: S4 (wire rows -> typed table: ms epoch to
     timestamp) + S7 (keep-last across overlapping fetch generations:
-    later fetch_seq wins per (symbol, ts); ties on fetch_seq — the same
-    generation landed twice, or overlapping pages within one fetch —
-    resolve deterministically by landing file (page files sort after
-    earlier pages for <10 pages, the ingest default) and finally by the
-    row payload itself, so re-running the read never flips the winner).
+    later fetch_seq wins per (symbol, ts); ties on fetch_seq — pages of
+    one fetch that overlap — go to the later page ordinal, and finally
+    to the row payload itself, so re-running the read never flips the
+    winner). A page without the ``page`` column (landed by an older
+    engine) reads NULL there, which sorts last: any page that carries an
+    ordinal wins over it within the same fetch_seq.
     """
     w = Window.partitionBy("symbol", "ts_ms").orderBy(
         F.col("fetch_seq").desc(),
-        F.input_file_name().desc(),
+        F.col("page").desc(),
         F.col("open").desc(),
         F.col("high").desc(),
         F.col("low").desc(),
